@@ -577,28 +577,14 @@ def _simhash_votes(
     return toks.groupBy(id_col).agg(*aggs)
 
 
-def simhash_signatures(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Per-doc 64-bit SimHash as a '0'/'1' string column `simhash`
-    (human-inspectable form; the join path uses the packed variant)."""
-    votes = _simhash_votes(df, text_col, id_col)
-    chars = [
-        F.when(F.col(f"v_{i}") >= 0, F.lit("1")).otherwise(F.lit("0"))
-        for i in range(N_SIMHASH_BITS)
-    ]
-    return votes.select(id_col, F.concat(*chars).alias("simhash"))
-
-
 def simhash_signatures_bits(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     words: DataFrame | None = None,
 ) -> DataFrame:
-    """Per-doc SimHash packed into one BIGINT `sig` (bit i = vote_i>=0).
-    Bit order matches position i+1 of the string form, so chunk c of the
-    string equals (sig >> 16c) & 0xFFFF."""
+    """Per-doc SimHash packed into one BIGINT `sig` (bit i = vote_i>=0),
+    so 16-bit chunk c is (sig >> 16c) & 0xFFFF."""
     votes = _simhash_votes(df, text_col, id_col, words=words)
     packed = " | ".join(
         f"shiftleft(CAST(CASE WHEN v_{i} >= 0 THEN 1 ELSE 0 END AS BIGINT), {i})"

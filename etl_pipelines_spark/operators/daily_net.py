@@ -42,13 +42,3 @@ def daily_net_transfers(
         .agg(F.sum("signed").alias("amount"))
         .filter(F.col("amount") != 0)
     )
-
-
-def scale_by_decimals(df: DataFrame, decimals: DataFrame, amount_col: str = "amount") -> DataFrame:
-    """amount / pow(10, decimals) via a broadcast dim join
-    (retrieve_dune_transfer_data.py:599-619)."""
-    return (
-        df.join(F.broadcast(decimals), "token_address", "left")
-        .withColumn(amount_col, F.col(amount_col) / F.pow(F.lit(10.0), F.col("decimals")))
-        .drop("decimals")
-    )

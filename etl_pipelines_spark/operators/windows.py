@@ -152,15 +152,3 @@ def global_running_sum(
         .withColumn(out, F.col("_local") + F.col("_before"))
         .drop("_bkt", "_local", "_before")
     )
-
-
-def global_row_number(df: DataFrame, order: Sequence[str | Column], out: str) -> DataFrame:
-    """Global-order row_number (W4; reference: orchestrator batch
-    assignment core_coin_wallet_profits_orchestrator.py:189-220).
-
-    WARNING: single-partition shuffle — acceptable only on small/compacted
-    inputs (ID issuance over *new* keys, batch maps). For large inputs use
-    :func:`dense_global_ids` in operators.ids which computes
-    partition-local row_numbers + partition-offset cumsum.
-    """
-    return df.withColumn(out, F.row_number().over(Window.orderBy(*order)).cast("long"))

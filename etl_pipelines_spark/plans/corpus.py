@@ -184,13 +184,3 @@ def ingest_corpus_batch(
         threshold=jaccard_threshold,
     )
     return survivors, {"digests": digests, "lsh": lsh_state}
-
-
-def stage_summary(report: CorpusReport) -> DataFrame:  # pragma: no cover
-    """Convenience: the report as a (stage, n_docs) frame for display."""
-    from etl_pipelines_spark.session import get_spark
-
-    spark = get_spark()
-    return spark.createDataFrame(
-        list(report.stage_counts.items()), "stage string, n_docs long"
-    )

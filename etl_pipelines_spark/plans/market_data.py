@@ -1,15 +1,19 @@
-"""core.coin_market_data pipeline — dedupe, source union, dip removal,
-set-based gap fill (reference:
+"""core.coin_market_data — every stage of the curated market-data
+table (reference:
 cloud_functions/core_coin_market_data/core_coin_market_data.py).
 
-Stages:
-1. per-source dedupe (A6 row_number, reference :49-57,88-92)
-2. normalization: null out non-positive market caps, drop bad-data rows
-   (reference :66,75-85) and source-priority union (:94-116)
-3. single-day dip removal (Q4, :140-190 — see operators.outliers)
-4. densify + forward fill with days_imputed lineage (D1/D2, :194-270 —
-   the reference's per-coin Python loop becomes one sequence/explode)
-5. hardcoded volume repairs (Q6, :287-296)
+`daily_prices_from` and `dense_market_data` are the two stages the
+warehouse refresh composes (plans/refresh.py) and the catalog calls
+(q21 and the daily-price consumers in queries/timeseries.py):
+1. daily prices: quantity-weighted average unit price per (coin, day)
+2. densify + forward fill with days_imputed lineage (D1/D2,
+   reference :194-270 — the per-coin Python loop becomes one
+   sequence/explode)
+
+The reference's source-normalization stages live here too:
+non-positive market caps nulled and bad-data rows dropped (:66,75-85),
+the source-priority union (:94-116), and the gap fill over the full
+market-data schema (price, market_cap, data_source, volume).
 """
 
 from __future__ import annotations
@@ -19,16 +23,56 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from etl_pipelines_spark.operators.dedupe import dedupe_keep_first
 from etl_pipelines_spark.operators.densify import densify_daily, with_days_imputed
-from etl_pipelines_spark.operators.outliers import remove_single_day_dips
 from etl_pipelines_spark.operators.windows import forward_fill
 
 
-def dedupe_streaming_inserts(raw: DataFrame, keys: Sequence[str], ts: str = "updated_at") -> DataFrame:
-    """Streaming-insert dupes keep the earliest updated_at
-    (reference :53-57 ``order by md.updated_at asc ... rn=1``)."""
-    return dedupe_keep_first(raw, list(keys), [F.col(ts).asc()])
+def daily_prices_from(lineitem: DataFrame) -> DataFrame:
+    """Daily quantity-weighted average unit price per part, over an
+    explicit lineitem frame (lets tests and skew fixtures feed
+    remapped variants through the real plan).
+
+    One explicit shuffle on coin_id serves the whole family of
+    consumers: hash(coin_id) satisfies the (coin_id, date) groupBy
+    clustering here AND every downstream per-coin window (dip
+    removal, ffill, trailing frames), so Catalyst inserts no further
+    exchanges — two implicit shuffles collapse into one, and the
+    single-file scan fans out across cores before the heavy agg."""
+    li = lineitem.select(
+        "l_partkey", "l_shipdate", "l_extendedprice", "l_quantity"
+    ).repartition("l_partkey")
+    return li.groupBy(
+        F.col("l_partkey").alias("coin_id"), F.to_date("l_shipdate").alias("date")
+    ).agg(
+        (
+            F.sum(F.col("l_extendedprice").cast("decimal(18,2)")).cast("double")
+            / F.sum("l_quantity").cast("double")
+        )
+        .cast("double")
+        .alias("price")
+    )
+
+
+def dense_market_data(md: DataFrame, end_date=None) -> DataFrame:
+    """coin_market_data from a daily-prices frame: densify + ffill
+    (D1/D2) with the days_imputed provenance column. `end_date`
+    overrides the scaffold horizon — the incremental driver MUST pass
+    the true global max date here, because its `md` frame is the
+    affected-coin subset whose own max may trail the corpus max (an
+    affected coin densified only to the subset max would diverge from
+    a full rebuild under uneven per-coin arrival)."""
+    dense = forward_fill(
+        with_days_imputed(
+            densify_daily(md, ["coin_id"], "date", end_date=end_date),
+            ["coin_id"],
+            presence_col="price",
+            date_col="date",
+        ),
+        ["coin_id"],
+        ["date"],
+        ["price"],
+    )
+    return dense.select("coin_id", "date", "price", "days_imputed")
 
 
 def normalize_market_data(raw: DataFrame) -> DataFrame:
@@ -58,39 +102,3 @@ def fill_market_data_gaps(market_data: DataFrame) -> DataFrame:
     dense = with_days_imputed(dense, ["coin_id"], presence_col="price", date_col="date")
     dense = forward_fill(dense, ["coin_id"], ["date"], ["price", "market_cap", "data_source"])
     return dense.withColumn("volume", F.coalesce(F.col("volume"), F.lit(0).cast("long")))
-
-
-def repair_negative_volume(df: DataFrame, coin_ids: Sequence[str]) -> DataFrame:
-    """abs() fix-up for specific coins (Q6, reference :287-296)."""
-    return df.withColumn(
-        "volume",
-        F.when(F.col("coin_id").isin(list(coin_ids)), F.abs(F.col("volume"))).otherwise(
-            F.col("volume")
-        ),
-    )
-
-
-def build_coin_market_data(
-    coingecko: DataFrame,
-    geckoterminal: DataFrame | None = None,
-    dip_threshold: float = 0.8,
-    recovery_threshold: float = 0.9,
-    negative_volume_repair_coins: Sequence[str] = (),
-) -> DataFrame:
-    primary = normalize_market_data(
-        dedupe_streaming_inserts(coingecko, ["coin_id", "date"])
-    )
-    if geckoterminal is not None:
-        secondary = dedupe_streaming_inserts(geckoterminal, ["coin_id", "date"])
-        merged = union_with_source_priority(primary, secondary)
-    else:
-        merged = primary
-    cleaned = remove_single_day_dips(
-        merged,
-        dip_threshold=dip_threshold,
-        recovery_threshold=recovery_threshold,
-    )
-    filled = fill_market_data_gaps(cleaned)
-    if negative_volume_repair_coins:
-        filled = repair_negative_volume(filled, negative_volume_repair_coins)
-    return filled

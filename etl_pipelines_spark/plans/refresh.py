@@ -13,15 +13,29 @@ the reference's `run_all_tests.sh` topology (build, then audit).
 from __future__ import annotations
 
 import os
+import threading
+import time
+import warnings
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_pipelines_spark.expectations import load_expectations, run_expectations
-from etl_pipelines_spark.operators.windows import cumulative_window
+from etl_pipelines_spark.functions.scalars import deterministic_id
+from etl_pipelines_spark.operators.dedupe import dedupe_keep_first
+from etl_pipelines_spark.operators.merge import upsert_partitions
+from etl_pipelines_spark.plans.market_data import daily_prices_from, dense_market_data
+from etl_pipelines_spark.plans.reconcile import validate_incremental_load
+from etl_pipelines_spark.plans.wallet_profits import wallet_profits_kernel_from
+from etl_pipelines_spark.plans.wallet_transfers import transfers_from, with_balance
 from etl_pipelines_spark.quality import ExpectationResult
-from etl_pipelines_spark.sources.registry import write_partitioned
+from etl_pipelines_spark.session import run_concurrently
+from etl_pipelines_spark.sources.registry import load_table, write_partitioned
+from etl_pipelines_spark.streaming.incremental import (
+    load_watermark_state,
+    save_watermark_state,
+)
 
 
 @dataclass
@@ -76,15 +90,6 @@ def refresh_warehouse(
     schema.yml's authoring surface) — adding a constraint to a curated
     table is a config edit; `expectations_path` points tests or
     sandboxes at an alternate ruleset."""
-    from etl_pipelines_spark.queries.timeseries import (
-        daily_prices,
-        transfers,
-        wallet_profits_kernel_from,
-    )
-
-    import threading
-    from concurrent.futures import ThreadPoolExecutor
-
     report = RefreshReport()
     rules = load_expectations(expectations_path)
     built: dict[str, DataFrame] = {}
@@ -124,33 +129,32 @@ def refresh_warehouse(
         # coins -> coin_facts chain (only that referential audit is
         # order-sensitive — round 12, §2.6)
         frames = dict(_dim_frames(spark, sf_dir))
-        with ThreadPoolExecutor(max_workers=2) as dim_pool:
-            chains_f = dim_pool.submit(land, "chains", frames["chains"])
+
+        def coins_then_facts():
             land("coins", frames["coins"])
             land("coin_facts", frames["coin_facts"])
-            chains_f.result()
+
+        run_concurrently(coins_then_facts, lambda: land("chains", frames["chains"]))
 
     def market_branch():
         # market data: densify + ffill (D1/D2) over daily prices.
         # shared by the dense rebuild AND the profits kernel:
         # keys-sized after the daily aggregation, so one cached copy
         # serves both
-        md = scope(daily_prices(spark, sf_dir)).persist()
-        land("coin_market_data", _dense_market(md))
+        md = scope(daily_prices_from(load_table(spark, sf_dir, "lineitem"))).persist()
+        land("coin_market_data", dense_market_data(md))
         return md
 
     def transfers_branch():
         # wallet transfers: daily net + running balance (W1/W2)
-        x = scope(transfers(spark, sf_dir))
-        return land("coin_wallet_transfers", _with_balance(x))
+        x = scope(
+            transfers_from(
+                load_table(spark, sf_dir, "lineitem"), load_table(spark, sf_dir, "orders")
+            )
+        )
+        return land("coin_wallet_transfers", with_balance(x))
 
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        dims_f = pool.submit(dims_branch)
-        md_f = pool.submit(market_branch)
-        cwt_f = pool.submit(transfers_branch)
-        md = md_f.result()
-        cwt = cwt_f.result()
-        dims_f.result()
+    _, md, cwt = run_concurrently(dims_branch, market_branch, transfers_branch)
 
     # 3. wallet profits: the flagship kernel (§3.2 in one job), fed
     # from the LANDED transfers table (the curated lineage: profits
@@ -197,10 +201,6 @@ def _dim_frames(spark: SparkSession, sf_dir: str, li_obs: DataFrame | None = Non
     first_seen, n_suppliers) — the incremental driver maintains them
     O(churn) from the standing coin_facts table instead of re-running
     the full-stream countDistinct aggregation every day."""
-    from etl_pipelines_spark.functions.scalars import deterministic_id
-    from etl_pipelines_spark.operators.dedupe import dedupe_keep_first
-    from etl_pipelines_spark.sources.registry import load_table
-
     nation = load_table(spark, sf_dir, "nation")
     region = load_table(spark, sf_dir, "region")
     chains = dedupe_keep_first(
@@ -271,31 +271,6 @@ def _dim_frames(spark: SparkSession, sf_dir: str, li_obs: DataFrame | None = Non
     return [("chains", chains), ("coins", coins), ("coin_facts", facts)]
 
 
-def _dense_market(md: DataFrame, end_date=None) -> DataFrame:
-    """coin_market_data from a daily-prices frame: densify + ffill
-    (D1/D2) with the days_imputed provenance column. `end_date`
-    overrides the scaffold horizon — the incremental driver MUST pass
-    the true global max date here, because its `md` frame is the
-    affected-coin subset whose own max may trail the corpus max (an
-    affected coin densified only to the subset max would diverge from
-    a full rebuild under uneven per-coin arrival)."""
-    from etl_pipelines_spark.operators.densify import densify_daily, with_days_imputed
-    from etl_pipelines_spark.operators.windows import forward_fill
-
-    dense = forward_fill(
-        with_days_imputed(
-            densify_daily(md, ["coin_id"], "date", end_date=end_date),
-            ["coin_id"],
-            presence_col="price",
-            date_col="date",
-        ),
-        ["coin_id"],
-        ["date"],
-        ["price"],
-    )
-    return dense.select("coin_id", "date", "price", "days_imputed")
-
-
 def _horizon_tails(
     standing: DataFrame, affected: DataFrame, horizon, prev_horizon=None
 ) -> DataFrame:
@@ -363,17 +338,6 @@ def _horizon_extension(tails: DataFrame, horizon) -> DataFrame:
     )
 
 
-def _with_balance(x: DataFrame) -> DataFrame:
-    """coin_wallet_transfers from a daily-net frame: the W1/W2 running
-    balance."""
-    return x.withColumn(
-        "balance",
-        F.sum("net_transfers")
-        .over(cumulative_window(["coin_id", "wallet_address"], ["date"]))
-        .cast("double"),
-    )
-
-
 # ------------------------------------------- incremental refresh driver
 
 
@@ -386,7 +350,6 @@ def refresh_warehouse_incremental(
     since: str | None = None,
     until: str | None = None,
     expectations_path: str | None = None,
-    audit_scope: str = "churn",
 ) -> RefreshReport:
     """The reference's STEADY-STATE mode as one driver: pull -> merge
     -> audit -> reconcile, per table in build order. Re-running
@@ -440,19 +403,18 @@ def refresh_warehouse_incremental(
        is read by PARTITION PRUNE: a densified table fills every coin
        to the previous horizon, so the last row per coin lives in the
        single date=prev_horizon partition — no full-table groupBy.
-    4. AUDIT  — `audit_scope="churn"` (default) runs each declared
-       expectation suite over the AFFECTED-COIN slice (those coins'
-       full history, so windowed checks — date gaps, monotone cumsums
-       — stay meaningful), not the whole standing table. Sound by
-       induction: untouched coins' rows passed the same suites when
-       they landed, the merge rewrites only touched partitions, and
-       the reconcile + horizon-reconcile prove the touched partitions
+    4. AUDIT  — each declared expectation suite runs over the
+       AFFECTED-COIN slice (those coins' full history, so windowed
+       checks — date gaps, monotone cumsums — stay meaningful), not
+       the whole standing table. Sound by induction: untouched
+       coins' rows passed the same suites when they landed, the merge
+       rewrites only touched partitions, and the reconcile +
+       horizon-reconcile prove the touched partitions
        landed exactly the recomputed/extension rows (the extension is
        seam-gap-free by construction: it starts at prev_horizon + 1).
        Every declared check is per-key (coin / coin+wallet), so a
-       slice suite checks exactly the rows whose inputs changed.
-       `audit_scope="full"` re-audits whole tables — the rebuild
-       discipline, O(table) per run.
+       slice suite checks exactly the rows whose inputs changed. (A
+       first run audits whole tables: nothing stood before it.)
     5. RECONCILE — `validate_incremental_load` proves each table's
        landed delta equals the recomputed delta (key diff + order-
        independent digest). Probe scans are partition-pruned by
@@ -472,36 +434,17 @@ def refresh_warehouse_incremental(
     Dimensions (chains/coins/coin_facts) rebuild whole each run —
     key-grain tables, the reference's daily dim rebuild discipline.
     """
-    if audit_scope not in ("churn", "full"):
-        raise ValueError(f"unknown audit_scope: {audit_scope!r}")
-    from etl_pipelines_spark.operators.merge import upsert_partitions
-    from etl_pipelines_spark.plans.reconcile import validate_incremental_load
-    from etl_pipelines_spark.queries.timeseries import (
-        daily_prices_from,
-        transfers_from,
-        wallet_profits_kernel_from,
-    )
-    from etl_pipelines_spark.sources.registry import load_table
-    from etl_pipelines_spark.streaming.incremental import (
-        load_watermark_state,
-        save_watermark_state,
-    )
-
-    import time as _time
-
-    import threading
-
     report = RefreshReport()
     rules = load_expectations(expectations_path)
     built: dict[str, DataFrame] = {}
-    _t0 = _time.time()
+    _t0 = time.time()
     # table-family branches run from concurrent driver threads (the
     # rebuild's shape since round 11); report/built mutations lock
     report_lock = threading.Lock()
 
     def tick(label: str) -> None:
         nonlocal _t0
-        now = _time.time()
+        now = time.time()
         report.stage_sec[label] = round(now - _t0, 2)
         _t0 = now
 
@@ -551,8 +494,6 @@ def refresh_warehouse_incremental(
         # surfaced on the report (guard_mode) AND warned, so operators
         # know exactly which run lacked the contract check instead of
         # finding a code comment after the fact
-        import warnings
-
         old = old.withColumn("n_rows", F.lit(None).cast("long"))
         report.guard_mode = "legacy"
         warnings.warn(
@@ -672,8 +613,6 @@ def refresh_warehouse_incremental(
     report.backdated_coins = int(srow["_n_viol"] or 0)
     bad = None
     if report.backdated_coins:
-        import warnings
-
         bad = stats.filter(viol_cond).select("coin_id").localCheckpoint(eager=True)
         warnings.warn(
             f"incremental refresh: {report.backdated_coins} coin(s) "
@@ -773,7 +712,7 @@ def refresh_warehouse_incremental(
         maintenance — the DIMS table family, independent of the fact
         families so it runs as its own concurrent branch (the rebuild's
         shape; job descriptions are thread-local)."""
-        _bt = _time.time()
+        _bt = time.time()
         spark.sparkContext.setJobDescription("incremental refresh: dims")
         li_obs = None
         dims_affected = None
@@ -840,15 +779,13 @@ def refresh_warehouse_incremental(
         # chains runs beside the coins -> coin_facts chain (round 12,
         # §2.6 — the serial write+audit loop was three fixed-floor
         # pairs back to back on a key-grain increment)
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            chains_f = pool.submit(build_dim, "chains")
+        def coins_then_facts():
             build_dim("coins")
             build_dim("coin_facts")
-            chains_f.result()
+
+        run_concurrently(coins_then_facts, lambda: build_dim("chains"))
         with report_lock:
-            report.stage_sec["dims"] = round(_time.time() - _bt, 2)
+            report.stage_sec["dims"] = round(time.time() - _bt, 2)
 
     def after_hwm(df: DataFrame, hwm: DataFrame | None) -> DataFrame:
         """Rows strictly past their coin's cutoff (first new arrival
@@ -886,7 +823,7 @@ def refresh_warehouse_incremental(
     def pruned(df: DataFrame, cut) -> DataFrame:
         return df.filter(F.col("date") > F.lit(cut)) if cut is not None else df
 
-    churn_audit = audit_scope == "churn" and not first_run
+    churn_audit = not first_run
 
     def merge_and_check(
         name: str,
@@ -918,19 +855,12 @@ def refresh_warehouse_incremental(
         # table — overlap their fixed-floor actions (round 12, §2.6:
         # they were two serial jobs per fact table on the one-day
         # increment's critical path)
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=1) as mc_pool:
-            audit_f = mc_pool.submit(
-                audit,
-                name,
-                back,
-                audit_slice(back) if audit_slice else None,
-            )
-            rec = validate_incremental_load(
+        rec, _ = run_concurrently(
+            lambda: validate_incremental_load(
                 delta_df, probe(back), keys, cache=not first_run
-            )
-            audit_f.result()
+            ),
+            lambda: audit(name, back, audit_slice(back) if audit_slice else None),
+        )
         with report_lock:
             report.reconcile[name] = rec
         return back
@@ -977,14 +907,14 @@ def refresh_warehouse_incremental(
     cmd_path = os.path.join(out_dir, "coin_market_data")
 
     def market_branch() -> None:
-        _bt = _time.time()
+        _bt = time.time()
         spark.sparkContext.setJobDescription("incremental refresh: market data")
         try:
             md_aff.count()  # prime the shared cache once
         finally:
             md_ready.set()  # never strand the profits branch
         # coin_market_data: the one densified table — docstring step 3
-        dense_aff = _dense_market(md_aff, end_date=horizon)
+        dense_aff = dense_market_data(md_aff, end_date=horizon)
         dense_delta = after_hwm(dense_aff, cuts)
         if cuts is not None and os.path.exists(cmd_path):
             # materialized once: merge + reconcile read it five times;
@@ -1019,26 +949,22 @@ def refresh_warehouse_incremental(
         cmd_back = spark.read.parquet(cmd_path)
         # audit, delta reconcile, and horizon reconcile are independent
         # consumers of the landed table — overlap their fixed-floor
-        # actions (round 12, §2.6, same shape as merge_and_check)
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=1) as mb_pool:
-            audit_f = mb_pool.submit(
-                audit,
-                "coin_market_data",
-                cmd_back,
-                touch(cmd_back) if churn_audit else None,
-            )
-            # dense_delta == dense_aff on the first run (no marks yet),
-            # so one expression serves both paths; the probe mirrors
-            # the cutoff
-            rec = validate_incremental_load(
+        # actions (round 12, §2.6, same shape as merge_and_check).
+        # dense_delta == dense_aff on the first run (no marks yet), so
+        # one expression serves both paths; the probe mirrors the cutoff
+        rec, _ = run_concurrently(
+            lambda: validate_incremental_load(
                 dense_delta,
                 after_hwm(touch(pruned(cmd_back, md_cut)), cuts),
                 ["coin_id", "date"],
                 cache=not first_run,
-            )
-            audit_f.result()
+            ),
+            lambda: audit(
+                "coin_market_data",
+                cmd_back,
+                touch(cmd_back) if churn_audit else None,
+            ),
+        )
         with report_lock:
             report.reconcile["coin_market_data"] = rec
         if ext is not None:
@@ -1056,21 +982,21 @@ def refresh_warehouse_incremental(
             with report_lock:
                 report.reconcile["coin_market_data_horizon"] = rec_h
         with report_lock:
-            report.stage_sec["coin_market_data"] = round(_time.time() - _bt, 2)
+            report.stage_sec["coin_market_data"] = round(time.time() - _bt, 2)
 
     def transfers_branch() -> None:
-        _bt = _time.time()
+        _bt = time.time()
         spark.sparkContext.setJobDescription("incremental refresh: transfers")
         x_aff = transfers_from(li_aff, load_table(spark, sf_dir, "orders"))
         cwt_back = merge_and_check(
             "coin_wallet_transfers",
-            after_hwm(_with_balance(x_aff), cuts),
+            after_hwm(with_balance(x_aff), cuts),
             ["coin_id", "wallet_address", "date"],
             probe=lambda back: after_hwm(touch(pruned(back, md_cut)), cuts),
             audit_slice=(lambda back: touch(back)) if churn_audit else None,
         )
         with report_lock:
-            report.stage_sec["coin_wallet_transfers"] = round(_time.time() - _bt, 2)
+            report.stage_sec["coin_wallet_transfers"] = round(time.time() - _bt, 2)
         # profits can gain/change rows anywhere from the first new
         # arrival of EITHER input (price or transfer) — the same
         # first-new cutoff, least-of-streams by construction (docstring
@@ -1078,7 +1004,7 @@ def refresh_warehouse_incremental(
         # lineage: profits derive from the table users see), filtered
         # to affected coins. Waits for the market branch's cache prime
         # so the kernel reads md_aff hot instead of racing to fill it.
-        _bt = _time.time()
+        _bt = time.time()
         md_ready.wait()
         spark.sparkContext.setJobDescription("incremental refresh: profits")
         profits = wallet_profits_kernel_from(
@@ -1095,20 +1021,11 @@ def refresh_warehouse_incremental(
             audit_slice=(lambda back: touch(back)) if churn_audit else None,
         )
         with report_lock:
-            report.stage_sec["coin_wallet_profits"] = round(_time.time() - _bt, 2)
+            report.stage_sec["coin_wallet_profits"] = round(time.time() - _bt, 2)
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        futures = [
-            pool.submit(dims_branch),
-            pool.submit(market_branch),
-            pool.submit(transfers_branch),
-        ]
-        for fut in futures:
-            fut.result()
+    run_concurrently(dims_branch, market_branch, transfers_branch)
     md_aff.unpersist()
-    _t0 = _time.time()
+    _t0 = time.time()
 
     # ---- advance watermarks LAST (state reflects only landed work).
     # Both streams key on the same raw arrival grain in this corpus, so

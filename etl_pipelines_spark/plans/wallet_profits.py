@@ -21,6 +21,8 @@ from pyspark.sql import functions as F
 from etl_pipelines_spark.operators.windows import cumulative_window, ordered_window
 
 PAIR = ["coin_id", "wallet_address"]
+# cumulative metrics accumulate in units of 1/QUANTUM (see the kernel)
+QUANTUM = 1e6
 
 
 def merge_prices_and_transfers(transfers: DataFrame, prices: DataFrame) -> DataFrame:
@@ -177,62 +179,59 @@ def filter_pre_inflow_records(profits: DataFrame) -> DataFrame:
     )
 
 
-def calculate_wallet_profitability(
-    profits: DataFrame, quantize: float | None = None
-) -> DataFrame:
+def calculate_wallet_profitability(profits: DataFrame) -> DataFrame:
     """The profitability kernel (reference :527-634):
     profits_change = (price - prev_price) * prev_balance with
     prev_price defaulting to price (first row) and prev_balance to 0;
     cumulative sums per pair; USD valuations.
 
-    `quantize` (e.g. 1e6): accumulate the cumulative metrics as
-    floor-scaled BIGINTs instead of raw double sums — exact in any
-    order, so the result is bit-identical across engines/plans (the
-    catalog's cross-engine float discipline; production keeps the raw
-    sums)."""
+    The cumulative metrics accumulate as floor-scaled BIGINTs at
+    1/QUANTUM instead of raw double sums — exact in any order, so the
+    result is bit-identical across engines and plans (the catalog's
+    cross-engine float discipline, which the warehouse shares)."""
     w = ordered_window(PAIR, ["date"])
     cum = cumulative_window(PAIR, ["date"])
-    prev_price = F.coalesce(F.lag("price", 1).over(w), F.col("price"))
-    prev_balance = F.coalesce(F.lag("balance", 1).over(w), F.lit(0.0))
+    prev_price = F.coalesce(F.lag("price").over(w), F.col("price"))
+    prev_balance = F.coalesce(F.lag("balance").over(w), F.lit(0.0))
+    usd_net = F.col("net_transfers") * F.col("price")
+    changes = profits.select(
+        *PAIR,
+        "date",
+        ((F.col("price") - prev_price) * prev_balance).cast("double").alias("profits_change"),
+        (F.col("balance") * F.col("price")).cast("double").alias("usd_balance"),
+        usd_net.cast("double").alias("usd_net_transfers"),
+        F.when(usd_net > 0, usd_net).otherwise(F.lit(0.0)).cast("double").alias("usd_inflows"),
+    )
 
-    def cumsum(col: str):
-        if quantize is None:
-            return F.sum(col).over(cum)
-        scaled = F.floor(F.col(col) * F.lit(quantize)).cast("long")
-        return F.sum(scaled).over(cum).cast("double") / F.lit(quantize)
+    def cumsum(col: str) -> F.Column:
+        scaled = F.floor(F.col(col) * F.lit(QUANTUM)).cast("long")
+        return F.sum(scaled).over(cum).cast("double") / F.lit(QUANTUM)
 
-    return (
-        profits.withColumn("profits_change", (F.col("price") - prev_price) * prev_balance)
-        .withColumn("profits_cumulative", cumsum("profits_change"))
-        .withColumn("usd_balance", F.col("balance") * F.col("price"))
-        .withColumn("usd_net_transfers", F.col("net_transfers") * F.col("price"))
-        .withColumn(
-            "usd_inflows",
-            F.when(F.col("usd_net_transfers") > 0, F.col("usd_net_transfers")).otherwise(
-                F.lit(0.0)
-            ),
-        )
-        .withColumn("usd_inflows_cumulative", cumsum("usd_inflows"))
-        .select(
-            "coin_id",
-            "wallet_address",
-            "date",
-            "profits_change",
-            "profits_cumulative",
-            "usd_balance",
-            "usd_net_transfers",
-            "usd_inflows",
-            "usd_inflows_cumulative",
-        )
+    return changes.select(
+        *PAIR,
+        "date",
+        "profits_change",
+        cumsum("profits_change").alias("profits_cumulative"),
+        "usd_balance",
+        "usd_net_transfers",
+        "usd_inflows",
+        cumsum("usd_inflows").alias("usd_inflows_cumulative"),
     )
 
 
-def build_wallet_profits(
-    transfers: DataFrame,
-    prices: DataFrame,
-    quantize: float | None = None,
-    persist: bool = False,
-) -> DataFrame:
+def wallet_profits_kernel_from(balances: DataFrame, prices: DataFrame) -> DataFrame:
+    """The kernel over explicit (balance-augmented transfers, prices)
+    frames, inner-joined on (coin_id, date) — q22's shape, and the
+    warehouse refresh's, which feeds its already-LANDED
+    coin_wallet_transfers table back through instead of re-deriving
+    transfers from the raw scans."""
+    merged = balances.select(
+        *PAIR, "date", "net_transfers", "balance"
+    ).join(prices.select("coin_id", "date", "price"), ["coin_id", "date"])
+    return calculate_wallet_profitability(merged)
+
+
+def build_wallet_profits(transfers: DataFrame, prices: DataFrame) -> DataFrame:
     """Full five-stage pipeline: merge -> first-price -> impute ->
     splice -> trim -> kernel.
 
@@ -245,16 +244,13 @@ def build_wallet_profits(
     first-day activity, pre-balances, per-coin firsts, kept rows)
     re-read it; the fused rewrite is the SCALE.md
     restructure-over-persist rule finishing the job — those branches
-    were one window pass in disguise. `persist=True` caches the merged
-    frame anyway (cache lifecycle is then the caller's); the staged
-    functions remain for per-stage use and tests."""
+    were one window pass in disguise. The staged functions remain for
+    per-stage use and tests."""
     merged = merge_prices_and_transfers(transfers, prices)
     with_first = add_first_price_info(merged, prices)
-    if persist:
-        with_first = with_first.persist()
     spliced = splice_with_imputation(with_first)
     trimmed = filter_pre_inflow_records(spliced)
-    return calculate_wallet_profitability(trimmed, quantize=quantize)
+    return calculate_wallet_profitability(trimmed)
 
 
 def recomputation_audit(

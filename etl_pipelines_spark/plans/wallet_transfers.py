@@ -1,19 +1,19 @@
-"""core.coin_wallet_transfers pipeline (reference:
+"""core.coin_wallet_transfers — every stage of the curated wallet
+transfers table (reference:
 cloud_functions/core_coin_wallet_transfers/core_coin_wallet_transfers.py:173-405).
 
-Stages:
-1. join staging transfers to the coins dim (J1), conditional-lowercase
-   wallet addresses on case-insensitive chains (P3, reference :228-231)
-2. burn/mint sentinel removal (P8, :212-215)
-3. running balance + transfer_sequence windows (W1/W2, :186-203)
-4. exclusion stack: wallet lists, contract addresses, coin exclusion
-   tables, 0x000000000% prefix rule (Q5/J4, :224-302)
-5. outlier rules Q1 (negative balances) and Q2 (supply overage)
-   (:306-385 — see operators.outliers)
+`transfers_from` and `with_balance` are the two stages the warehouse
+refresh composes (plans/refresh.py) and the catalog calls (q22, q75
+and the transfer consumers in queries/timeseries.py):
+1. daily signed net transfers per (coin, wallet, day), from the
+   per-lineitem event stream `transfers_base_from`
+2. the running balance window (W1/W2, reference :186-203)
 
-Scale: the coins/chains/exclusion dims broadcast; the only big shuffle
-is the (token, wallet) window sort, which doubles as the partitioning
-for Q1's groupBy.
+`normalize_addresses` is the reference's conditional lowercase of
+wallet addresses on case-insensitive chains (P3, :228-231).
+
+Scale: the only big shuffle is the one coin-keyed exchange placed
+before the join, which every later (coin, wallet) window reuses.
 """
 
 from __future__ import annotations
@@ -23,15 +23,81 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from etl_pipelines_spark.operators.outliers import (
-    remove_negative_balance_wallets,
-    remove_supply_overage_wallets,
-)
-from etl_pipelines_spark.operators.windows import with_running_count, with_running_sum
+from etl_pipelines_spark.operators.windows import cumulative_window
 
-BURN_MINT_SENTINELS = ("None", "0x0000000000000000000000000000000000000000", "<nil>")
 
-KEYS = ["coin_id", "token_address", "wallet_address"]
+def transfers_from(
+    lineitem: DataFrame, orders: DataFrame, shuffle_on=("l_partkey",)
+) -> DataFrame:
+    """Daily signed net transfers per (part, customer), over explicit
+    lineitem/orders frames (lets tests and skew fixtures feed remapped
+    variants through the real plan).
+
+    One shuffle, placed BEFORE the join, serves the whole downstream
+    pipeline: hash(coin_id) satisfies this groupBy's (coin, wallet,
+    date) clustering, every later (coin, wallet) window/groupBy, and
+    co-partitions the (coin, date) join against daily prices — no
+    further exchanges (pinned by test_plan_audits). Repartitioning the
+    scan side first also fans a single-file test corpus out across
+    cores before the join+agg CPU; the orders side broadcasts under
+    AQE at this size and falls back to a shuffle join at scale. Hot
+    coins are the skew risk of keying on coin alone — AQE skew-join
+    handles them (session default).
+
+    `shuffle_on=None` drops the explicit coin-keyed exchange and lets
+    the daily aggregation's OWN shuffle key on the full (coin, wallet,
+    date) composite: consumers that never reuse coin clustering
+    (the sketch builds — they re-aggregate to their own grains) would
+    otherwise funnel a Zipf-hot coin's third-of-the-corpus through ONE
+    task before their first aggregation (the q72 lesson)."""
+    base = transfers_base_from(lineitem, orders, shuffle_on=shuffle_on)
+    return base.groupBy("coin_id", "wallet_address", "date").agg(
+        F.sum("_sq").cast("double").alias("net_transfers")
+    )
+
+
+def transfers_base_from(
+    lineitem: DataFrame, orders: DataFrame, shuffle_on=("l_partkey",)
+) -> DataFrame:
+    """The PRE-AGGREGATION transfer event stream: one row per lineitem
+    with (coin_id, wallet_address, date, _sq signed quantity),
+    coin_id-clustered by the same single up-front exchange as
+    `transfers_from`. Consumers that don't need the daily net grain
+    (the sketch suite's KMV distinct-wallet and HLL register builds —
+    they hash wallets, so the (coin, wallet, date) pre-agg is pure
+    wasted CPU for them) read this and skip the 6M-row hash
+    aggregation; summing `_sq` per (coin, wallet, date) reproduces
+    `transfers_from` exactly (quantities are integers in doubles, so
+    the sum is order-independent). `shuffle_on=None` skips the
+    up-front exchange for consumers that plan their own (q72 keys its
+    one shuffle on the (coin, wallet) pair to stay balanced under
+    hot-coin skew)."""
+    li = lineitem.select(
+        "l_orderkey", "l_partkey", "l_shipdate", "l_returnflag", "l_quantity"
+    )
+    if shuffle_on:
+        li = li.repartition(*shuffle_on)
+    o = orders.select("o_orderkey", "o_custkey")
+    signed = F.when(F.col("l_returnflag") == "R", -F.col("l_quantity")).otherwise(
+        F.col("l_quantity")
+    )
+    return li.join(o, li.l_orderkey == o.o_orderkey).select(
+        F.col("l_partkey").alias("coin_id"),
+        F.col("o_custkey").alias("wallet_address"),
+        F.to_date("l_shipdate").alias("date"),
+        signed.alias("_sq"),
+    )
+
+
+def with_balance(x: DataFrame) -> DataFrame:
+    """coin_wallet_transfers from a daily-net frame: the W1/W2 running
+    balance."""
+    return x.withColumn(
+        "balance",
+        F.sum("net_transfers")
+        .over(cumulative_window(["coin_id", "wallet_address"], ["date"]))
+        .cast("double"),
+    )
 
 
 def normalize_addresses(
@@ -48,85 +114,3 @@ def normalize_addresses(
             ),
         )
     return df.drop("is_case_sensitive")
-
-
-def remove_burn_mint_addresses(df: DataFrame) -> DataFrame:
-    return df.filter(~F.col("wallet_address").isin(*BURN_MINT_SENTINELS))
-
-
-def with_balance_and_sequence(df: DataFrame) -> DataFrame:
-    """Running sum -> balance, running count -> transfer_sequence per
-    (token, wallet) ordered by date (reference :186-203)."""
-    keys = ["coin_id", "token_address", "wallet_address"]
-    df = with_running_sum(df, keys, ["date"], "net_transfers", "balance")
-    return with_running_count(df, keys, ["date"], "transfer_sequence")
-
-
-def apply_exclusions(
-    df: DataFrame,
-    wallet_exclusions: DataFrame | None = None,
-    contract_addresses: DataFrame | None = None,
-    coin_exclusions: DataFrame | None = None,
-    zero_prefix: str = "0x000000000%",
-) -> DataFrame:
-    """The stacked anti-joins (Q5, reference :224-302). All exclusion
-    sides are small -> broadcast anti-joins, no shuffle of the fact."""
-    if wallet_exclusions is not None:
-        df = df.join(
-            F.broadcast(wallet_exclusions.select("wallet_address").distinct()),
-            "wallet_address",
-            "left_anti",
-        )
-    if contract_addresses is not None:
-        df = df.join(
-            F.broadcast(
-                contract_addresses.select(F.col("address").alias("wallet_address")).distinct()
-            ),
-            "wallet_address",
-            "left_anti",
-        )
-    if coin_exclusions is not None:
-        df = df.join(
-            F.broadcast(coin_exclusions.select("coin_id").distinct()), "coin_id", "left_anti"
-        )
-    # 0x000000000% prefix rule (reference :267-269)
-    return df.filter(~F.col("wallet_address").like(zero_prefix))
-
-
-def build_coin_wallet_transfers(
-    staging: DataFrame,
-    coins: DataFrame,
-    chains: DataFrame | None = None,
-    wallet_exclusions: DataFrame | None = None,
-    contract_addresses: DataFrame | None = None,
-    coin_exclusions: DataFrame | None = None,
-) -> DataFrame:
-    """staging: (chain_id?, token_address, wallet_address, date,
-    net_transfers) daily nets; coins: dim with coin_id/address/chain_id/
-    total_supply."""
-    dim = coins.select(
-        "coin_id", "chain_id", F.col("address").alias("token_address"), "total_supply"
-    )
-    df = staging.join(F.broadcast(dim), "token_address")
-    if chains is not None:
-        df = normalize_addresses(df, chains)
-    df = remove_burn_mint_addresses(df)
-    df = with_balance_and_sequence(df)
-    df = apply_exclusions(
-        df,
-        wallet_exclusions=wallet_exclusions,
-        contract_addresses=contract_addresses,
-        coin_exclusions=coin_exclusions,
-    )
-    df = remove_negative_balance_wallets(df)
-    df = remove_supply_overage_wallets(df, coins)
-    return df.select(
-        "coin_id",
-        "chain_id",
-        "token_address",
-        "wallet_address",
-        "date",
-        "net_transfers",
-        "balance",
-        "transfer_sequence",
-    )

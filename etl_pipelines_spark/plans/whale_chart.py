@@ -1,57 +1,18 @@
-"""Whale-count serving query (reference:
-cloud_functions/dreambot_whale_chart/dreambot_whale_chart.py:370-434).
+"""Whale chart serving helpers (reference:
+cloud_functions/dreambot_whale_chart/dreambot_whale_chart.py).
 
-Reference shape: per-wallet cumsum -> pivot(date x wallet) -> ffill ->
-pd.cut into small/medium/whale -> dummy-encode -> per-date counts.
-
-Spark shape (SURVEY.md A10/D6): NO pivot — densify each wallet's daily
-balance (sequence/explode), forward-fill, bucket with CASE WHEN, then
-groupBy(date).pivot(bucket) over the 3 fixed bucket values. The
-O(dates x wallets) wide matrix never materializes.
+The per-date whale counts themselves are catalog entry q23
+(queries/timeseries.py): cumsum -> bucket -> per-date counts as
+bucket-change delta events, with no users x days pivot. This module
+holds what sits around it: the threshold derivation (:932-952) and
+the renderer-agnostic chart payload (:786-833).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-from etl_pipelines_spark.operators.densify import densify_daily
-from etl_pipelines_spark.operators.windows import cumulative_window, forward_fill
 
 BUCKETS = ("small", "medium", "whale")
-
-
-def whale_counts(
-    transfers: DataFrame,
-    shrimp_threshold: float,
-    whale_threshold: float,
-    wallet_col: str = "wallet_address",
-    date_col: str = "date",
-    amount_col: str = "net_transfers",
-) -> DataFrame:
-    """Daily counts of wallets per balance bucket for one token.
-
-    transfers: (wallet, date, daily net amount) for a single token.
-    Returns (date, small, medium, whale) counts with per-wallet balances
-    forward-filled across the full date range.
-    """
-    daily = transfers.groupBy(wallet_col, date_col).agg(F.sum(amount_col).alias("_net"))
-    cum = cumulative_window([wallet_col], [date_col])
-    balances = daily.withColumn("balance", F.sum("_net").over(cum)).drop("_net")
-    dense = densify_daily(balances, [wallet_col], date_col)
-    dense = forward_fill(dense, [wallet_col], [date_col], ["balance"])
-    bucketed = dense.withColumn(
-        "bucket",
-        F.when(F.col("balance") < shrimp_threshold, F.lit("small"))
-        .when(F.col("balance") < whale_threshold, F.lit("medium"))
-        .otherwise(F.lit("whale")),
-    )
-    return (
-        bucketed.groupBy(date_col)
-        .pivot("bucket", list(BUCKETS))
-        .agg(F.count(F.lit(1)))
-        .na.fill(0, list(BUCKETS))
-    )
 
 
 def derive_whale_thresholds(

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_pipelines_spark.queries.catalog import QUERIES, QuerySpec
+from etl_pipelines_spark.session import run_concurrently
 
 # (slot name -> spark type, duckdb type) vocabulary used by combos
 _TYPES = {
@@ -62,7 +63,7 @@ COMBO_MEMBERS: dict[str, list[str]] = {}
 # slot unpersists its predecessor, so at most one cache per suite feed
 # is live at a time; bench/driver clearCache between queries still
 # clears everything. Guarded by a lock since round 11: suite members
-# are constructed from concurrent threads (see _parallel_frames).
+# are constructed from concurrent threads (see _combo's spark_fn).
 _SUITE_CACHE: dict[str, DataFrame] = {}
 _SUITE_CACHE_LOCK = None  # created lazily to keep import side-effect free
 
@@ -74,28 +75,6 @@ def _cache_lock():
 
         _SUITE_CACHE_LOCK = threading.Lock()
     return _SUITE_CACHE_LOCK
-
-
-def _parallel_frames(builders: list) -> list[DataFrame]:
-    """Construct member frames from concurrent driver threads.
-
-    Several member builders eagerly materialize a persisted feed
-    (persist + count) before returning their lazy frame — a fixed-floor
-    Spark job each. Called sequentially those barrier jobs serialize
-    (measured: the q33 pair suite spent 7-8.6 s of its 15 s inside
-    spark_fn before the union job even started); from a thread pool
-    they overlap and the scheduler back-fills idle cores (guide §2.6,
-    overlap independent jobs). Plan construction itself is py4j socket
-    I/O, which also overlaps. Results return IN INPUT ORDER so the
-    union shape (and therefore the combo oracle alignment) is
-    deterministic. A builder exception propagates unchanged."""
-    if len(builders) <= 1:
-        return [b() for b in builders]
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=len(builders)) as pool:
-        futs = [pool.submit(b) for b in builders]
-        return [f.result() for f in futs]
 
 
 def _suite_persist(slot: str, df: DataFrame, eager: bool = False) -> DataFrame:
@@ -138,11 +117,18 @@ def _combo(
     specs = [(tag, QUERIES[qname], mapping) for tag, qname, mapping in members]
 
     def spark_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # members construct concurrently: any eager feed-priming jobs
-        # inside a member (persist+count) overlap instead of
-        # serializing; the union itself stays in declared member order
-        frames = _parallel_frames(
-            [
+        # members construct concurrently. Several member builders
+        # eagerly materialize a persisted feed (persist + count) before
+        # returning their lazy frame — a fixed-floor Spark job each.
+        # Called sequentially those barrier jobs serialize (measured:
+        # the q33 pair suite spent 7-8.6 s of its 15 s inside spark_fn
+        # before the union job even started); from concurrent threads
+        # they overlap and the scheduler back-fills idle cores. Plan
+        # construction itself is py4j socket I/O, which also overlaps.
+        # Results come back in member order, so the union shape (and
+        # therefore the combo oracle alignment) is deterministic.
+        frames = run_concurrently(
+            *[
                 (lambda s=spec: s.spark_fn(spark, sf_dir))
                 for _, spec, _ in specs
             ]
@@ -192,11 +178,8 @@ def _pair_suite_shared_scan(schema, members):
             prefix_filter_pairs,
             simhash_near_dups,
         )
-        from etl_pipelines_spark.queries.llmops import (
-            _decontamination,
-            _parquet_rows,
-        )
-        from etl_pipelines_spark.sources.registry import load_table
+        from etl_pipelines_spark.queries.llmops import _decontamination
+        from etl_pipelines_spark.sources.registry import footer_stats, load_table
 
         docs = load_table(spark, sf_dir, "documents")
         # ONE text pass feeds every word-grain member: the persisted
@@ -236,7 +219,7 @@ def _pair_suite_shared_scan(schema, members):
                         # overflowing a 12g driver)
                         prefix_filter_pairs(
                             docs, 0.5, tokens=toks,
-                            broadcast_df=_parquet_rows(sf_dir, "documents")
+                            broadcast_df=footer_stats(sf_dir, "documents").n_rows
                             <= 100_000,
                         ),
                         arrays=arrs,
@@ -270,7 +253,7 @@ def _pair_suite_shared_scan(schema, members):
                 for tag, qname in others
             ]
         )
-        built = _parallel_frames([fn for _, fn in ordered])
+        built = run_concurrently(*[fn for _, fn in ordered])
         frames = dict(built[0])
         frames.update(
             {tag: df for (tag, _), df in zip(ordered[1:], built[1:])}
@@ -294,7 +277,7 @@ def _shared_words_scan(schema, members, frames_fn, persist=False, eager=False):
     persisted 2.0-2.21 s — but inverts once the corpus outgrows the
     cache-write cost: q55 (4 sharing members) flipped at sf0.1 (lazy
     2.41 s vs persisted 1.84 s), and q52 flipped at sf1
-    (tools/profile_q52.py, one session: lazy 3.64 s, lazy-persist
+    (one session: lazy 3.64 s, lazy-persist
     4.5 s, EAGER persist 3.14-3.38 s — a lazy cache lets the union's
     branches race past it, the persisted_shingle_arrays lesson, so
     `eager` materializes before the consumers are planned). The cache
@@ -330,12 +313,12 @@ def _shared_words_scan(schema, members, frames_fn, persist=False, eager=False):
             for tag, qname, _ in members
             if served is not None and tag not in served
         ]
-        built = _parallel_frames(
-            [words_group]
-            + [
+        built = run_concurrently(
+            words_group,
+            *[
                 (lambda q=qname: QUERIES[q].spark_fn(spark, sf_dir))
                 for _, qname in rest
-            ]
+            ],
         )
         frames = dict(built[0])
         frames.update({tag: df for (tag, _), df in zip(rest, built[1:])})
@@ -417,8 +400,7 @@ def _q52_frames(words: DataFrame) -> dict[str, DataFrame]:
     """All three members ride the ONE eager-persisted words cache.
     A second suite-level cache of the (doc, token, tf) aggregate —
     the round-10 verdict's suggested fix for the tf double-pass —
-    was built and MEASURED WORSE at sf1 (tools/profile_q52.py, two
-    sessions, warm rounds: words-shared 3.46-3.65 s vs tf-shared
+    was built and MEASURED WORSE at sf1 (two sessions, warm rounds: words-shared 3.46-3.65 s vs tf-shared
     4.23-5.20 s vs tf-only 3.67-5.74 s): the extra eager barrier and
     cache write cost more than the duplicated explode+partial-agg
     over the cached words. The real q52 win was inside the member —
@@ -510,8 +492,9 @@ def _q51_direct_grain(schema, members):
             quantile_sketch_build,
             quantile_sketch_estimate,
         )
+        from etl_pipelines_spark.plans.wallet_transfers import transfers_from
         from etl_pipelines_spark.queries.catalog import t
-        from etl_pipelines_spark.queries.timeseries import _KMV_K, transfers_from
+        from etl_pipelines_spark.queries.timeseries import _KMV_K
 
         # UNCLUSTERED daily-net feed (shuffle_on=None): the suite's
         # builds re-aggregate to their own grains and never reuse coin
@@ -522,8 +505,7 @@ def _q51_direct_grain(schema, members):
         # rank-hash branches start concurrently inside the one union
         # job and RACE past a lazy cache, each recomputing the
         # join+aggregate feed (~3 s at sf1) before the cache fills.
-        # Interleaved 3-round A/B at sf1 (tools/profile_q51.py, full
-        # 5-member suite): x eager + dh lazy-persist 14.2 s < x eager
+        # Interleaved 3-round A/B at sf1 (full 5-member suite): x eager + dh lazy-persist 14.2 s < x eager
         # + dh eager 15.3 s < lazy-lazy (the round-10 shape) 18.5 s <
         # x eager + qsk prefilter64 15.8 s — the barrier costs one
         # serialized feed build, the race costs ~2.
@@ -553,7 +535,7 @@ def _q51_direct_grain(schema, members):
             # branches RACE (each recomputing the heavy aggregation
             # before the cache filled) and an eager persist serialized
             # a second barrier behind the x count. Interleaved 3-round
-            # A/B at sf1 (tools/profile_q51.py): unpersisted 8.55 s <
+            # A/B at sf1: unpersisted 8.55 s <
             # one-barrier 9.30 < r11 dh-lazy-persist 10.64 < state
             # lazy-persist 10.94.
             state = fused_kmv_hll_state(
@@ -609,12 +591,12 @@ def _q51_direct_grain(schema, members):
         rest = [
             (tag, qname) for tag, qname, _ in members if tag not in served
         ]
-        built = _parallel_frames(
-            [transfers_group]
-            + [
+        built = run_concurrently(
+            transfers_group,
+            *[
                 (lambda q=qname: QUERIES[q].spark_fn(spark, sf_dir))
                 for _, qname in rest
-            ]
+            ],
         )
         frames = frames_from(*built[0])
         frames.update({tag: df for (tag, _), df in zip(rest, built[1:])})
@@ -1121,7 +1103,7 @@ for _c in _COMBOS:
     elif _c.name == "q52_term_mining":
         # persist+eager since round 10: the three members consume the
         # split ~8x (tf/dl/query/bigram/unigram branches); the round-3
-        # lazy-wins A/B inverted at sf1 (profile_q52.py: lazy 3.64 s,
+        # lazy-wins A/B inverted at sf1 (lazy 3.64 s,
         # lazy-persist 4.5 s, eager 3.14-3.38 s — see
         # _shared_words_scan's docstring)
         _c.spark_fn = _shared_words_scan(

@@ -26,19 +26,8 @@ from etl_pipelines_spark.llm.similarity import (
 )
 from etl_pipelines_spark.llm.text import with_predicted_lang, with_token_stats
 from etl_pipelines_spark.queries.catalog import register, t
-from etl_pipelines_spark.sources.registry import FingerprintCache
+from etl_pipelines_spark.sources.registry import FingerprintCache, footer_stats
 
-
-def _parquet_rows(sf: str, table: str) -> int:
-    """Exact row count from parquet footer metadata — the corpus-size
-    input to the adaptive-parameter laws (plane bits, k-means k). A
-    `df.count()` job costs a full scheduler round-trip just to sum the
-    same footer counts; the driver reads them directly in ~1 ms."""
-    import os
-
-    import pyarrow.parquet as pq
-
-    return pq.ParquetFile(os.path.join(sf, f"{table}.parquet")).metadata.num_rows
 
 SHINGLE_SQL = """
         SELECT DISTINCT doc_id,
@@ -540,7 +529,7 @@ def _adaptive_buckets_sql() -> str:
 )
 def q37(spark: SparkSession, sf: str) -> DataFrame:
     emb = t(spark, sf, "embeddings")
-    bands = adaptive_plane_bands(_parquet_rows(sf, "embeddings"))
+    bands = adaptive_plane_bands(footer_stats(sf, "embeddings").n_rows)
     return cosine_near_dups(emb, bands, threshold=0.4)
 
 
@@ -736,7 +725,7 @@ def q38(spark: SparkSession, sf: str) -> DataFrame:
     cents = _CODEBOOKS.get_or_build(
         sf,
         lambda: kmeans_centroids(
-            emb, k=adaptive_km_k(_parquet_rows(sf, "embeddings")),
+            emb, k=adaptive_km_k(footer_stats(sf, "embeddings").n_rows),
             n_iter=KM_ITER, seed=KM_SEED,
         ),
     )
@@ -802,7 +791,7 @@ def q96(spark: SparkSession, sf: str) -> DataFrame:
     cents = _CODEBOOKS.get_or_build(
         sf,
         lambda: kmeans_centroids(
-            emb, k=adaptive_km_k(_parquet_rows(sf, "embeddings")),
+            emb, k=adaptive_km_k(footer_stats(sf, "embeddings").n_rows),
             n_iter=KM_ITER, seed=KM_SEED,
         ),
     )
@@ -2518,7 +2507,7 @@ def q74(spark: SparkSession, sf: str) -> DataFrame:
     # measured fine — threshold 2x the good point, 5x under the bad)
     cands = prefix_filter_pairs(
         docs, 0.5, tokens=toks,
-        broadcast_df=_parquet_rows(sf, "documents") <= 100_000,
+        broadcast_df=footer_stats(sf, "documents").n_rows <= 100_000,
     )
     return (
         array_jaccard_verify(cands, arrays=arrs)

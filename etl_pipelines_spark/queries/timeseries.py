@@ -1,5 +1,9 @@
 """Time-series specialty queries (SURVEY.md §2.6-2.7, §2.11, §3.2-3.3):
-the wallet-profits kernel, gap fill/densify, dip removal, whale buckets.
+catalog entries for the wallet-profits kernel, gap fill/densify, dip
+removal, whale buckets. The curated-table stages these entries call —
+daily prices, densify, transfers, running balance, the profits
+kernel — live in plans/ (market_data, wallet_transfers,
+wallet_profits), shared with the warehouse refresh.
 
 Mapping of the reference's domain onto the testdata star schema:
 coin_id -> l_partkey, wallet_address -> o_custkey, transfer -> lineitem
@@ -12,14 +16,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from etl_pipelines_spark.operators.densify import densify_daily, with_days_imputed
 from etl_pipelines_spark.operators.outliers import remove_single_day_dips
-from etl_pipelines_spark.operators.windows import (
-    cumulative_window,
-    forward_fill,
-    ordered_window,
+from etl_pipelines_spark.operators.windows import cumulative_window, ordered_window
+from etl_pipelines_spark.plans.market_data import daily_prices_from, dense_market_data
+from etl_pipelines_spark.plans.wallet_profits import (
+    build_wallet_profits,
+    wallet_profits_kernel_from,
+)
+from etl_pipelines_spark.plans.wallet_transfers import (
+    transfers_base_from,
+    transfers_from,
+    with_balance,
 )
 from etl_pipelines_spark.queries.catalog import register, t
+from etl_pipelines_spark.sources.registry import footer_stats
 
 # ---------------------------------------------------------------- shared
 
@@ -42,100 +52,15 @@ TRANSFERS_SQL = """
 
 
 def daily_prices(spark: SparkSession, sf: str) -> DataFrame:
-    """Daily quantity-weighted average unit price per part.
-
-    One explicit shuffle on coin_id serves the whole family of
-    consumers: hash(coin_id) satisfies the (coin_id, date) groupBy
-    clustering here AND every downstream per-coin window (dip
-    removal, ffill, trailing frames), so Catalyst inserts no further
-    exchanges — two implicit shuffles collapse into one, and the
-    single-file scan fans out across cores before the heavy agg."""
+    """Daily quantity-weighted average unit price per part
+    (plans.market_data.daily_prices_from over the lineitem table)."""
     return daily_prices_from(t(spark, sf, "lineitem"))
 
 
-def daily_prices_from(lineitem: DataFrame) -> DataFrame:
-    """daily_prices over an explicit lineitem frame (lets tests and
-    skew fixtures feed remapped variants through the real plan)."""
-    li = lineitem.select(
-        "l_partkey", "l_shipdate", "l_extendedprice", "l_quantity"
-    ).repartition("l_partkey")
-    return li.groupBy(
-        F.col("l_partkey").alias("coin_id"), F.to_date("l_shipdate").alias("date")
-    ).agg(
-        (
-            F.sum(F.col("l_extendedprice").cast("decimal(18,2)")).cast("double")
-            / F.sum("l_quantity").cast("double")
-        )
-        .cast("double")
-        .alias("price")
-    )
-
-
 def transfers(spark: SparkSession, sf: str) -> DataFrame:
-    """Daily signed net transfers per (part, customer).
-
-    One shuffle, placed BEFORE the join, serves the whole downstream
-    pipeline: hash(coin_id) satisfies this groupBy's (coin, wallet,
-    date) clustering, every later (coin, wallet) window/groupBy, and
-    co-partitions the (coin, date) join against daily_prices — no
-    further exchanges (pinned by test_plan_audits). Repartitioning the
-    scan side first also fans a single-file test corpus out across
-    cores before the join+agg CPU; the orders side broadcasts under
-    AQE at this size and falls back to a shuffle join at scale. Hot
-    coins are the skew risk of keying on coin alone — AQE skew-join
-    handles them (session default)."""
+    """Daily signed net transfers per (part, customer)
+    (plans.wallet_transfers.transfers_from over lineitem x orders)."""
     return transfers_from(t(spark, sf, "lineitem"), t(spark, sf, "orders"))
-
-
-def transfers_from(
-    lineitem: DataFrame, orders: DataFrame, shuffle_on=("l_partkey",)
-) -> DataFrame:
-    """transfers over explicit lineitem/orders frames (lets tests and
-    skew fixtures feed remapped variants through the real plan).
-
-    `shuffle_on=None` drops the explicit coin-keyed exchange and lets
-    the daily aggregation's OWN shuffle key on the full (coin, wallet,
-    date) composite: consumers that never reuse coin clustering
-    (the sketch builds — they re-aggregate to their own grains) would
-    otherwise funnel a Zipf-hot coin's third-of-the-corpus through ONE
-    task before their first aggregation (the q72 lesson)."""
-    base = transfers_base_from(lineitem, orders, shuffle_on=shuffle_on)
-    return base.groupBy("coin_id", "wallet_address", "date").agg(
-        F.sum("_sq").cast("double").alias("net_transfers")
-    )
-
-
-def transfers_base_from(
-    lineitem: DataFrame, orders: DataFrame, shuffle_on=("l_partkey",)
-) -> DataFrame:
-    """The PRE-AGGREGATION transfer event stream: one row per lineitem
-    with (coin_id, wallet_address, date, _sq signed quantity),
-    coin_id-clustered by the same single up-front exchange as
-    `transfers_from`. Consumers that don't need the daily net grain
-    (the sketch suite's KMV distinct-wallet and HLL register builds —
-    they hash wallets, so the (coin, wallet, date) pre-agg is pure
-    wasted CPU for them) read this and skip the 6M-row hash
-    aggregation; summing `_sq` per (coin, wallet, date) reproduces
-    `transfers_from` exactly (quantities are integers in doubles, so
-    the sum is order-independent). `shuffle_on=None` skips the
-    up-front exchange for consumers that plan their own (q72 keys its
-    one shuffle on the (coin, wallet) pair to stay balanced under
-    hot-coin skew)."""
-    li = lineitem.select(
-        "l_orderkey", "l_partkey", "l_shipdate", "l_returnflag", "l_quantity"
-    )
-    if shuffle_on:
-        li = li.repartition(*shuffle_on)
-    o = orders.select("o_orderkey", "o_custkey")
-    signed = F.when(F.col("l_returnflag") == "R", -F.col("l_quantity")).otherwise(
-        F.col("l_quantity")
-    )
-    return li.join(o, li.l_orderkey == o.o_orderkey).select(
-        F.col("l_partkey").alias("coin_id"),
-        F.col("o_custkey").alias("wallet_address"),
-        F.to_date("l_shipdate").alias("date"),
-        signed.alias("_sq"),
-    )
 
 
 # --------------------------------------------------------------------- q20
@@ -207,11 +132,7 @@ def q20(spark: SparkSession, sf: str) -> DataFrame:
     tags=("densify", "window"),
 )
 def q21(spark: SparkSession, sf: str) -> DataFrame:
-    daily = daily_prices(spark, sf).filter(F.col("coin_id") < 25)
-    dense = densify_daily(daily, ["coin_id"], "date")
-    dense = with_days_imputed(dense, ["coin_id"], presence_col="price", date_col="date")
-    dense = forward_fill(dense, ["coin_id"], ["date"], ["price"])
-    return dense.select("coin_id", "date", "price", "days_imputed")
+    return dense_market_data(daily_prices(spark, sf).filter(F.col("coin_id") < 25))
 
 
 # --------------------------------------------------------------------- q22
@@ -262,54 +183,8 @@ def q21(spark: SparkSession, sf: str) -> DataFrame:
     tags=("window", "kernel", "flagship"),
 )
 def q22(spark: SparkSession, sf: str) -> DataFrame:
-    x = transfers(spark, sf)
-    p = daily_prices(spark, sf)
-    balances = x.withColumn(
-        "balance",
-        F.sum("net_transfers")
-        .over(cumulative_window(["coin_id", "wallet_address"], ["date"]))
-        .cast("double"),
-    )
-    return wallet_profits_kernel_from(balances, p)
-
-
-def wallet_profits_kernel_from(balances: DataFrame, prices: DataFrame) -> DataFrame:
-    """The q22 kernel over explicit (balance-augmented transfers,
-    prices) frames — shared by q22 and the warehouse refresh, which
-    feeds its already-LANDED coin_wallet_transfers table back through
-    instead of re-deriving transfers from the raw scans."""
-    pair = ["coin_id", "wallet_address"]
-    cum = cumulative_window(pair, ["date"])
-    w = ordered_window(pair, ["date"])
-    merged = balances.select(
-        *pair, "date", "net_transfers", "balance"
-    ).join(prices.select("coin_id", "date", "price"), ["coin_id", "date"])
-    prev_price = F.coalesce(F.lag("price").over(w), F.col("price"))
-    prev_balance = F.coalesce(F.lag("balance").over(w), F.lit(0.0))
-    usd_net = F.col("net_transfers") * F.col("price")
-    changes = merged.select(
-        "coin_id",
-        "wallet_address",
-        "date",
-        ((F.col("price") - prev_price) * prev_balance).cast("double").alias("profits_change"),
-        (F.col("balance") * F.col("price")).cast("double").alias("usd_balance"),
-        usd_net.cast("double").alias("usd_net_transfers"),
-        F.when(usd_net > 0, usd_net).otherwise(F.lit(0.0)).cast("double").alias("usd_inflows"),
-    )
-    def cum_scaled(col: str) -> F.Column:
-        scaled = F.floor(F.col(col) * F.lit(1e6)).cast("long")
-        return (F.sum(scaled).over(cum).cast("double") / F.lit(1e6))
-
-    return changes.select(
-        "coin_id",
-        "wallet_address",
-        "date",
-        "profits_change",
-        cum_scaled("profits_change").alias("profits_cumulative"),
-        "usd_balance",
-        "usd_net_transfers",
-        "usd_inflows",
-        cum_scaled("usd_inflows").alias("usd_inflows_cumulative"),
+    return wallet_profits_kernel_from(
+        with_balance(transfers(spark, sf)), daily_prices(spark, sf)
     )
 
 
@@ -433,8 +308,6 @@ def wallet_profits_kernel_from(balances: DataFrame, prices: DataFrame) -> DataFr
     tags=("window", "kernel", "pipeline", "flagship"),
 )
 def q75(spark: SparkSession, sf: str) -> DataFrame:
-    from etl_pipelines_spark.plans.wallet_profits import build_wallet_profits
-
     x = transfers(spark, sf)
     p = daily_prices(spark, sf)
     # delay each coin's price series 30 days -> real pre-price activity
@@ -444,83 +317,10 @@ def q75(spark: SparkSession, sf: str) -> DataFrame:
         .filter(F.col("date") >= F.date_add("_m", 30))
         .drop("_m")
     )
-    pair = ["coin_id", "wallet_address"]
-    xb = x.withColumn(
-        "balance",
-        F.sum("net_transfers").over(cumulative_window(pair, ["date"])).cast("double"),
-    )
-    return build_wallet_profits(xb, p, quantize=1e6)
+    return build_wallet_profits(with_balance(x), p)
 
 
 # --------------------------------------------------------------------- q23
-def _parquet_ts_date_bounds(sf: str, table: str, col: str = "ts"):
-    """Global [min, max] DATE of a parquet timestamp column read
-    straight from footer column statistics (guide §6, the
-    `_parquet_rows` idiom) — the round-11 verdict's q23 item: the
-    calendar-bounds aggregate was a second full scan of events just
-    for min/max(ts). Footer min/max are exact for INT64-backed
-    timestamps and skip NULLs exactly like F.min/F.max; the date of
-    the min equals the min of the dates because to_date is monotone.
-    Returns None — callers fall back to the aggregation scan —
-    whenever any part file / row group lacks exact stats, the column
-    is not a plain timestamp, or a pre-epoch value appears (unit
-    truncation below assumes non-negative epochs, like the read
-    path's `ts div 1000`)."""
-    import glob
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    path = os.path.join(sf, f"{table}.parquet")
-    files = (
-        [path]
-        if os.path.isfile(path)
-        else sorted(glob.glob(os.path.join(path, "*.parquet")))
-    )
-    if not files:
-        return None
-    lo = hi = None
-    for f in files:
-        pf = pq.ParquetFile(f)
-        ftype = pf.schema_arrow.field(col).type
-        if not pa.types.is_timestamp(ftype):
-            return None
-        per_us = {"s": 1_000_000, "ms": 1_000, "us": 1, "ns": 1}[ftype.unit]
-        div_ns = 1_000 if ftype.unit == "ns" else 1
-        md = pf.metadata
-        idx = next(
-            (
-                j
-                for j in range(md.row_group(0).num_columns)
-                if md.row_group(0).column(j).path_in_schema == col
-            ),
-            None,
-        ) if md.num_row_groups else None
-        for i in range(md.num_row_groups):
-            stats = md.row_group(i).column(idx).statistics
-            if (
-                stats is None
-                or not stats.has_min_max
-                or not isinstance(stats.min_raw, int)
-                or stats.min_raw < 0
-            ):
-                return None
-            us_lo = stats.min_raw // div_ns * per_us
-            us_hi = stats.max_raw // div_ns * per_us
-            lo = us_lo if lo is None else min(lo, us_lo)
-            hi = us_hi if hi is None else max(hi, us_hi)
-    if lo is None:
-        return None
-    import datetime as _dt
-
-    epoch = _dt.date(1970, 1, 1)
-    return (
-        epoch + _dt.timedelta(days=lo // 86_400_000_000),
-        epoch + _dt.timedelta(days=hi // 86_400_000_000),
-    )
-
-
 @register(
     "q23_whale_bucket_counts",
     """
@@ -616,7 +416,7 @@ def q23(spark: SparkSession, sf: str) -> DataFrame:
     # a second full events scan just for min/max(ts) — one whole job
     # removed; the aggregation stays as the fallback for inputs
     # without exact footer stats.
-    bounds = _parquet_ts_date_bounds(sf, "events")
+    bounds = footer_stats(sf, "events", ts_col="ts").ts_dates
     if bounds is not None:
         dates = spark.range(1).select(
             F.explode(

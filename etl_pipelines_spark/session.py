@@ -55,3 +55,36 @@ def configure_runtime(spark: SparkSession) -> SparkSession:
     # testdata events.parquet uses TIMESTAMP(NANOS); read as long + convert
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     return spark
+
+
+def run_concurrently(*fns):
+    """Call each function concurrently and return their results in
+    argument order.
+
+    The first function runs on the calling thread, the rest on pool
+    threads, so a caller's thread-local Spark job description still
+    covers its own share of the work. Every call is joined before
+    anything is raised, and no failure is dropped: one failure
+    re-raises unchanged; several raise together as an ExceptionGroup,
+    so an error on one thread can never hide another's."""
+    if len(fns) <= 1:
+        return [fn() for fn in fns]
+    from concurrent.futures import ThreadPoolExecutor
+
+    results, errors = [None] * len(fns), []
+    with ThreadPoolExecutor(max_workers=len(fns) - 1) as pool:
+        futures = [pool.submit(fn) for fn in fns[1:]]
+        try:
+            results[0] = fns[0]()
+        except Exception as exc:
+            errors.append(exc)
+        for i, fut in enumerate(futures, 1):
+            try:
+                results[i] = fut.result()
+            except Exception as exc:
+                errors.append(exc)
+    if len(errors) == 1:
+        raise errors[0]
+    if errors:
+        raise ExceptionGroup("concurrent calls failed", errors)
+    return results

@@ -9,7 +9,9 @@ pushdown + column pruning from Catalyst for free.
 
 from __future__ import annotations
 
+import datetime as dt
 import os
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -40,6 +42,93 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         if field.name == "ts" and field.dataType.simpleString() == "bigint":
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return df
+
+
+@dataclass(frozen=True)
+class FooterStats:
+    n_rows: int | None
+    ts_dates: tuple[dt.date, dt.date] | None = None
+
+
+def footer_stats(sf_dir: str, name: str, ts_col: str | None = None) -> FooterStats:
+    """Row count and, with `ts_col`, the global [min, max] DATE of that
+    timestamp column, read driver-side from the parquet footers of one
+    table in the `load_table` layout — a single `<name>.parquet` file
+    or a Spark-written directory of part files, listed once.
+
+    A footer read costs ~1 ms where a count or min/max job costs a
+    scheduler round-trip plus a scan. Footer min/max are
+    exact for INT64-backed timestamps and skip NULLs exactly like
+    F.min/F.max; the date of the min equals the min of the dates
+    because to_date is monotone.
+
+    A probe, so it never raises. `n_rows` is None when the table has no
+    part files or a footer cannot be read (the caller's own scan then
+    reports the error). `ts_dates` is None — callers fall back to an
+    aggregation scan — on any such error and whenever the column is
+    missing, not a plain timestamp, or lacks exact min/max statistics
+    in some row group, or a pre-epoch value appears (unit truncation
+    below assumes non-negative epochs, like the read path's
+    `ts div 1000`)."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    files = (
+        [path] if os.path.isfile(path) else sorted(glob.glob(os.path.join(path, "*.parquet")))
+    )
+    try:
+        footers = [pq.ParquetFile(f) for f in files]
+    except Exception:  # missing or corrupt part file
+        footers = []
+    if not footers:
+        return FooterStats(None)
+    n_rows = sum(pf.metadata.num_rows for pf in footers)
+    if ts_col is None:
+        return FooterStats(n_rows)
+    try:
+        ts_dates = _footer_ts_dates(footers, ts_col)
+    except Exception:  # missing column, unreadable metadata: scan instead
+        ts_dates = None
+    return FooterStats(n_rows, ts_dates)
+
+
+def _footer_ts_dates(footers, ts_col: str):
+    import pyarrow as pa
+
+    lo = hi = None
+    for pf in footers:
+        ftype = pf.schema_arrow.field(ts_col).type
+        if not pa.types.is_timestamp(ftype):
+            return None
+        per_us = {"s": 1_000_000, "ms": 1_000, "us": 1, "ns": 1}[ftype.unit]
+        div_ns = 1_000 if ftype.unit == "ns" else 1
+        md = pf.metadata
+        for i in range(md.num_row_groups):
+            rg = md.row_group(i)
+            stats = next(
+                rg.column(j) for j in range(rg.num_columns)
+                if rg.column(j).path_in_schema == ts_col
+            ).statistics
+            if (
+                stats is None
+                or not stats.has_min_max
+                or not isinstance(stats.min_raw, int)
+                or stats.min_raw < 0
+            ):
+                return None
+            us_lo = stats.min_raw // div_ns * per_us
+            us_hi = stats.max_raw // div_ns * per_us
+            lo = us_lo if lo is None else min(lo, us_lo)
+            hi = us_hi if hi is None else max(hi, us_hi)
+    if lo is None:
+        return None
+    epoch = dt.date(1970, 1, 1)
+    return (
+        epoch + dt.timedelta(days=lo // 86_400_000_000),
+        epoch + dt.timedelta(days=hi // 86_400_000_000),
+    )
 
 
 def register_testdata(spark: SparkSession, sf_dir: str, tables=TABLES) -> None:

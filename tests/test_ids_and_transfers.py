@@ -5,10 +5,7 @@ import datetime as dt
 from pyspark.sql import functions as F
 
 from etl_pipelines_spark.operators.ids import dense_global_ids, issue_new_ids
-from etl_pipelines_spark.plans.wallet_transfers import (
-    BURN_MINT_SENTINELS,
-    normalize_addresses,
-)
+from etl_pipelines_spark.plans.wallet_transfers import normalize_addresses
 
 D = dt.date
 
@@ -88,9 +85,6 @@ class TestTransfersStages:
             for r in normalize_addresses(df, chains).collect()
         }
         assert got == {"eth": "0xabc", "sol": "SoLAddR"}
-
-    def test_burn_mint_sentinels_defined(self):
-        assert "0x0000000000000000000000000000000000000000" in BURN_MINT_SENTINELS
 
 
 class TestSessionWindowConsistency:

@@ -519,16 +519,17 @@ class TestWhaleCensusDeltaEvents:
     def test_footer_bounds_match_scan(self, spark, tmp_path):
         """The calendar-bounds shortcut (parquet footer min/max ts ->
         dates, round 12) returns exactly the scan's min/max dates on
-        driver testdata, and falls back (None) when the column lacks
-        usable stats — here: a non-timestamp ts."""
+        driver testdata, and falls back (None) on any unusable input —
+        a non-timestamp ts, a missing column, a corrupt part file."""
         import datetime as dtm
 
-        from etl_pipelines_spark.queries.timeseries import (
-            _parquet_ts_date_bounds,
-        )
+        from etl_pipelines_spark.sources.registry import footer_stats
+
+        def bounds(sf_dir, name, col="ts"):
+            return footer_stats(sf_dir, name, ts_col=col).ts_dates
 
         sf = "/root/testdata/sf0.001"
-        got = _parquet_ts_date_bounds(sf, "events")
+        got = bounds(sf, "events")
         ev = spark.read.parquet(sf + "/events.parquet")
         ts = ev["ts"]
         if dict(ev.dtypes)["ts"] == "bigint":
@@ -542,7 +543,15 @@ class TestWhaleCensusDeltaEvents:
         spark.createDataFrame([("x",)], "ts string").write.parquet(
             str(tmp_path / "weird.parquet")
         )
-        assert _parquet_ts_date_bounds(str(tmp_path), "weird") is None
+        assert bounds(str(tmp_path), "weird") is None
+
+        assert bounds(sf, "events", col="no_such_column") is None
+
+        spark.range(3).select(F.col("id").cast("timestamp").alias("ts")).write.parquet(
+            str(tmp_path / "torn.parquet")
+        )
+        (tmp_path / "torn.parquet" / "part-99999-corrupt.parquet").write_bytes(b"not parquet")
+        assert bounds(str(tmp_path), "torn") is None
 
     def test_matches_dense_reference(self, spark, tmp_path):
         import datetime as dtm

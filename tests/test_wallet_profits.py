@@ -256,10 +256,8 @@ def _skewed_inputs(spark, sf_dir, hot_coin=1, hot_tenths=3):
     """Pipeline inputs with ~hot_tenths/10 of lineitem rows remapped
     onto one coin — deterministic (hash of the row key), so repeated
     runs see the identical skewed corpus."""
-    from etl_pipelines_spark.queries.timeseries import (
-        daily_prices_from,
-        transfers_from,
-    )
+    from etl_pipelines_spark.plans.market_data import daily_prices_from
+    from etl_pipelines_spark.plans.wallet_transfers import transfers_from
     from etl_pipelines_spark.sources.registry import load_table
 
     li = load_table(spark, sf_dir, "lineitem")
@@ -282,7 +280,7 @@ def _run_pipeline(x, p):
         .over(cumulative_window(["coin_id", "wallet_address"], ["date"]))
         .cast("double"),
     )
-    return build_wallet_profits(xb, p, quantize=1e6)
+    return build_wallet_profits(xb, p)
 
 
 def test_skewed_hot_coin_matches_slice_oracle(spark):
